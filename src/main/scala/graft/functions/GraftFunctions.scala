@@ -94,5 +94,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     // analysis-phase guardrail (opt-in via its conf key; see CartesianGuard)
     ext.injectCheckRule(session => graft.plans.CartesianGuard.check(session))
+    // small batch plans run as one job of one task (see SingleTaskPlan)
+    ext.injectQueryPostPlannerStrategyRule(_ => graft.plans.SingleTaskPlan)
   }
 }

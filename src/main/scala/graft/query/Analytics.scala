@@ -45,6 +45,8 @@ object Analytics {
       brand: Option[String] = None,
       excludeStatuses: Seq[String] = Seq("F"),
       page: Page = Page("o_orderdate")): DataFrame = {
+    val sortable = Set("o_orderdate", "o_totalprice")
+    require(sortable.contains(page.sortBy), s"sort column ${page.sortBy} not in whitelist $sortable")
     val base = orders
       .filter(col("o_orderdate").between(to_timestamp(lit(start)), to_timestamp(lit(end))))
       .filter(!col("o_orderstatus").isInCollection(excludeStatuses))
@@ -60,7 +62,6 @@ object Analytics {
       col("o_totalprice"), col("l_linenumber"), col("p_partkey"))
     // unique tie-break must be the line, not the (duplicated) order key
     val key = if (page.ascending) col(page.sortBy).asc else col(page.sortBy).desc
-    require(Set("o_orderdate", "o_totalprice").contains(page.sortBy))
     projected
       .orderBy(key, col("o_orderkey").asc, col("l_linenumber").asc, col("p_partkey").asc)
       .offset(page.offset).limit(page.limit)

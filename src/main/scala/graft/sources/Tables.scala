@@ -35,8 +35,13 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    // get-then-putIfAbsent, not computeIfAbsent: the inference is a Spark
+    // job, and computeIfAbsent would run it holding the map's bin lock,
+    // stalling concurrent callers that open any table in the same bin
+    val schema = Option(schemaCache.get(path)).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      Option(schemaCache.putIfAbsent(path, inferred)).getOrElse(inferred)
+    }
     val raw = spark.read.schema(schema).parquet(path)
     val ntz = raw.schema.fields
       .filter(_.dataType == org.apache.spark.sql.types.TimestampNTZType)

@@ -339,6 +339,17 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     assert(rows.length == 2) // J4 semantics: dupes preserved, not semi-joined
   }
 
+  test("productSales rejects a sort column off its whitelist before building any join") {
+    // inputs without the join columns: a check after the joins would fail
+    // analysis first, with an AnalysisException instead
+    val empty = Seq(1L).toDF("x")
+    val e = intercept[IllegalArgumentException] {
+      Analytics.productSales(empty, empty, empty, "2024-01-01", "2024-12-31",
+        page = Page("o_custkey"))
+    }
+    assert(e.getMessage.contains("o_custkey") && e.getMessage.contains("o_totalprice"), e.getMessage)
+  }
+
   test("correlatedActivity ranks the planted identical pair first") {
     // users 1 and 2 share an identical 30-hour activity pattern (corr 1);
     // user 3 runs the inverted pattern (corr -1 with both)
